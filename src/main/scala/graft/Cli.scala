@@ -41,9 +41,9 @@ object Cli {
             ResultStore.upsert(ResultStore.read(spark, dest), env)
           else env
         val digest = ResultStore.commit(spark, merged, dest)
-        // count the committed store, not `merged` — its lazy plan still
-        // points at the pre-promote files
-        val n = ResultStore.read(spark, dest).count()
+        // the count commit just wrote to the manifest: `merged`'s lazy
+        // plan still points at the pre-promote files
+        val n = ResultStore.committedRows(dest)
         println(s"[graft] $provider: $n results, $digest")
       case "status" :: root :: Nil =>
         Catalog.status(spark, root).collect().foreach { r =>

@@ -273,7 +273,8 @@ object Similarity {
       else projected).collect()
       .map(_.getSeq[Float](0).toArray).filter(_.nonEmpty)
     require(collected.nonEmpty, s"trainCentroids: no non-empty '$vecCol'")
-    if (collected.length < 32L * nlist)
+    if (collected.length < 32L * nlist &&
+        sparseTrainWarned.add((collected.length, nlist)))
       log.warn(s"trainCentroids: ${collected.length} training points " +
         s"for nlist=$nlist (${collected.length / math.max(1, nlist)} " +
         "per centroid, < 32) — cells will be statistically noisy; " +
@@ -283,6 +284,11 @@ object Similarity {
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  // (training points, nlist) pairs already warned about: the same
+  // undersized fit recurs on every call over the same corpus, and one
+  // line per JVM says all the warning has to say
+  private val sparseTrainWarned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int)]()
 
   /** The deterministic local k-means both quantizer fits share:
     * content-sort (layout independence), k-means++ seeding on a fixed

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Keyed, checksummed, atomically-promoted result store — the Spark-first
@@ -56,20 +57,52 @@ object ResultStore {
     dedupKeyed(s.unionByName(b), Replace, idCol).drop("precedence")
   }
 
+  /** The envelope row every store holds (`result.py:33-37`). [[commit]]
+    * accepts nothing else, so [[read]] can pin it instead of inferring
+    * it from a parquet footer, which costs a Spark job per read. */
+  private val EnvelopeSchema = "identifier STRING, schema STRING, item STRING"
+  private val envelopeType = StructType.fromDDL(EnvelopeSchema)
+
+  /** Fails, naming the offending columns, unless `df` is exactly the
+    * envelope string triple (any column order). */
+  private def requireEnvelope(df: DataFrame, destDir: String): Unit = {
+    val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val want = envelopeType.fields.map(f => f.name -> f.dataType).toMap
+    val extra = got.keySet -- want.keySet
+    val missing = want.keySet -- got.keySet
+    val mistyped = want.collect { case (n, t) if got.get(n).exists(_ != t) =>
+      s"$n ${got(n).simpleString}" }
+    if (extra.nonEmpty || missing.nonEmpty || mistyped.nonEmpty)
+      throw new IllegalArgumentException(
+        s"commit to $destDir: not an envelope frame ($EnvelopeSchema):" +
+          Seq("extra column(s)" -> extra, "missing column(s)" -> missing,
+            "non-string column(s)" -> mistyped)
+            .collect { case (what, cs) if cs.nonEmpty =>
+              s" $what ${cs.toSeq.sorted.mkString(", ")}" }.mkString(";"))
+  }
+
   /** Write results + manifest to a staging dir, then atomically promote.
     * Returns the manifest digest (digest-of-sorted-listing, the
-    * workspace.py:268-284 scheme, with Spark's xxhash64).
+    * workspace.py:268-284 scheme, with Spark's xxhash64). `df` must be
+    * an envelope frame (`identifier`, `schema`, `item`, all strings);
+    * anything else throws before a file is written.
+    *
+    * Two Spark actions: the write, then one aggregate over the written
+    * files that yields both the digest and the manifest's row count.
     *
     * `df` MAY read from `destDir` itself (the upsert path): it is fully
     * materialized into staging before the promote. But the caller must
     * not re-execute `df` after commit — its lazy plan still references
-    * the replaced files; use [[read]] on the committed store instead. */
+    * the replaced files; use [[read]] or [[committedRows]] instead. */
   def commit(spark: SparkSession, df: DataFrame, destDir: String): String = {
+    requireEnvelope(df, destDir)
     val dest = Paths.get(destDir)
     val staging = Paths.get(destDir + ".staging")
     deleteRecursive(staging)
 
-    df.write.mode(SaveMode.Overwrite).parquet(staging.resolve("results").toString)
+    df.select(envelopeType.fieldNames.map(col).toSeq: _*)
+      .write.mode(SaveMode.Overwrite)
+      .parquet(staging.resolve("results").toString)
 
     // manifest: xxh64 of each row's canonical form, sorted by identifier
     // (deterministic listing order, O2), then digest-of-listing. The
@@ -82,20 +115,19 @@ object ResultStore {
     // The single aggregation task holds (identifier, 8-byte hash)
     // pairs — the listing itself, same scale as the reference's
     // driver-built checksum listing (workspace.py:268-284), not the
-    // store's payload bytes.
-    val written = spark.read.parquet(staging.resolve("results").toString)
-    val listing = written
+    // store's payload bytes. The row count rides the same aggregate.
+    val listing = read(spark, staging.toString)
       .select(col("identifier"),
         xxhash64(col("identifier"), col("schema"), col("item")).as("h"))
       .agg(xxhash64(array_join(transform(
         sort_array(collect_list(struct(col("identifier"), col("h")))),
         s => concat_ws(":", s.getField("identifier"), s.getField("h"))),
-        "\n")).as("digest"))
-      .head().getLong(0)
+        "\n")).as("digest"), count(lit(1)).as("rows"))
+      .head()
 
-    val digest = java.lang.Long.toHexString(listing)
+    val digest = java.lang.Long.toHexString(listing.getLong(0))
     Files.writeString(staging.resolve("manifest.txt"),
-      s"xxh64:$digest\nrows:${written.count()}\n")
+      s"xxh64:$digest\nrows:${listing.getLong(1)}\n")
 
     // atomic promote: move aside old, rename staging into place
     val old = Paths.get(destDir + ".old")
@@ -170,9 +202,10 @@ object ResultStore {
     commit(spark, df, destDir)
   }
 
-  /** Read back a committed store. */
+  /** Read back a committed store; throws if `destDir` holds none. */
   def read(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.parquet(Paths.get(destDir).resolve("results").toString)
+    spark.read.schema(envelopeType)
+      .parquet(Paths.get(destDir).resolve("results").toString)
 
   /** The store's manifest line, if committed. */
   def manifest(destDir: String): Option[String] = {
@@ -186,6 +219,12 @@ object ResultStore {
     manifest(destDir).flatMap(_.linesIterator
       .collectFirst { case l if l.startsWith("rows:") =>
         l.stripPrefix("rows:").trim.toLong })
+
+  /** [[manifestRows]] of a store [[commit]] just wrote: a missing
+    * manifest there means the promote went wrong, so it throws. */
+  def committedRows(destDir: String): Long =
+    manifestRows(destDir).getOrElse(throw new IllegalStateException(
+      s"no manifest row count in $destDir after commit"))
 
   private def deleteRecursive(p: Path): Unit = {
     if (Files.exists(p)) {

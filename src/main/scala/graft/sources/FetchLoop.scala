@@ -62,7 +62,7 @@ object FetchLoop {
       providerName: String): (Long, String) = {
     val dest = s"$storeRoot/$providerName"
     val digest = graft.sinks.ResultStore.commit(spark, envelopes, dest)
-    (graft.sinks.ResultStore.manifestRows(dest).getOrElse(0L), digest)
+    (graft.sinks.ResultStore.committedRows(dest), digest)
   }
 
   /** S1 end-to-end: fetch page 0, read totalResults/resultsPerPage,

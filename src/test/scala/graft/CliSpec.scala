@@ -28,6 +28,50 @@ class CliSpec extends AnyFunSuite {
     assert(Catalog.status(spark, root).count() == 0)
   }
 
+  /** Spark jobs `body` launches from this thread, counted by a listener
+    * once the listener bus has drained. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.graft.bridge.settleListenerBus(sc, 10000)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("job budget: a store commit is one write plus one manifest " +
+      "aggregate, and the Cli does not re-count the store") {
+    val root = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val run = List("run", "secdb", fixture("secdb.json"), "wolfi:rolling",
+      root)
+    Cli.run(spark, run)
+    // re-run over the existing store: the provider scan and transform,
+    // the upsert write and the digest-and-count aggregate. The envelope
+    // read schema is pinned, so no read infers one from a footer, and
+    // the Cli's count comes from the manifest
+    assert(jobsLaunchedBy(Cli.run(spark, run)) == 5)
+    assert(ResultStore.committedRows(s"$root/wolfi") == 6L)
+    // a fresh local frame: the write, then the aggregate's two stages
+    val fresh = Seq(("a", "s", "v1"), ("b", "s", "v2"))
+      .toDF("identifier", "schema", "item")
+    assert(jobsLaunchedBy(
+      ResultStore.commit(spark, fresh, s"$root/fresh")) == 3)
+    assert(ResultStore.committedRows(s"$root/fresh") == 2L)
+  }
+
   test("registry mirrors the reference's 27-provider catalog + tag select") {
     import graft.providers.Registry
     assert(Registry.providers.size == 27)

@@ -195,6 +195,54 @@ class ProviderSpec extends AnyFunSuite {
     }
     assert(digests.distinct.size == 1,
       s"digest depends on partition layout: $digests")
+    // golden, recorded from the two-scan commit (digest aggregate, then a
+    // separate count): counting inside the digest aggregate must leave
+    // the manifest bytes unchanged
+    val golden = "xxh64:52591293275986ee"
+    assert(digests.head == golden)
+    Seq(1, 7, 32).foreach(n => assert(ResultStore.manifest(s"$dir/r$n")
+      .contains(s"$golden\nrows:2000\n")))
+  }
+
+  test("commit rejects a frame that is not the envelope triple, naming " +
+      "the column, and writes nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-guard").toString
+    val env = Seq(("a", "s", "v1")).toDF("identifier", "schema", "item")
+    def rejected(df: org.apache.spark.sql.DataFrame, name: String): String = {
+      val dest = s"$dir/$name"
+      val err = intercept[IllegalArgumentException] {
+        ResultStore.commit(spark, df, dest)
+      }
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dest)))
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$dest.staging")))
+      err.getMessage
+    }
+    val extra = rejected(env.withColumn("precedence", lit(1)), "extra")
+    assert(extra.contains("extra column(s) precedence"), extra)
+    val missing = rejected(env.drop("item"), "missing")
+    assert(missing.contains("missing column(s) item"), missing)
+    val typed = rejected(env.withColumn("item", lit(7)), "typed")
+    assert(typed.contains("non-string column(s) item int"), typed)
+    // column order is not part of the contract: the store reads back the
+    // same rows whatever order the frame carried
+    val dest = s"$dir/reordered"
+    ResultStore.commit(spark, env.select("item", "identifier", "schema"), dest)
+    assert(ResultStore.read(spark, dest).as[(String, String, String)]
+      .collect().toSeq == Seq(("a", "s", "v1")))
+  }
+
+  test("a store that was never committed: read throws, committedRows " +
+      "names the store") {
+    val dest = java.nio.file.Files.createTempDirectory("graft-absent")
+      .resolve("wolfi").toString
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ResultStore.read(spark, dest).count()
+    }
+    val err = intercept[IllegalStateException] {
+      ResultStore.committedRows(dest)
+    }
+    assert(err.getMessage.contains(dest))
   }
 
   test("result store: compaction preserves content digest, shrinks files") {
